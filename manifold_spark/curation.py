@@ -61,13 +61,23 @@ def curate_corpus(
     The count() per stage is for the audit report; drop it (or read the
     counts from stage writes) when auditing isn't needed.
 
-    Stage boundaries persist through the shared operator-cache registry
-    (release with `operator_cache_scope()` / `release_shingle_caches()`):
-    without it every stage count re-executes the whole upstream DAG —
-    measured 70.0 → 61.6 s at sf0.1 (the bulk of the cost is the stages
-    themselves, LSH + components + LM training; the persists buy the
-    recompute cascade, not the stage work). This is the local stand-in
-    for the 100 TB stage-boundary parquet writes.
+    Stage frames are cached through the shared operator-cache registry
+    and released by `operator_cache_scope()` / `release_shingle_caches()`,
+    so each audit count and the next stage read the cached rows instead
+    of re-running the upstream DAG:
+
+    - persisted: `cleaned`, `exact`, `fuzzy` and `mixed`, each read by
+      its count and by the next stage; and `survivors` (the repetition
+      pass's keepers), which the LM stage reads for training, scoring
+      and the join-back across separate executions — uncached, the
+      repetition pass ran once per read;
+    - local checkpoints (`plans.boundary.stage_boundary`): the LM model
+      and `quality`, where truncating the logical plan matters more
+      than the rows.
+
+    The returned `packed` frame reads these caches, so consume it before
+    the scope exits. This is the local stand-in for the 100 TB
+    stage-boundary parquet writes.
     """
     from manifold_spark.operators.c4 import (
         DEFAULT_BLOCKLIST,
@@ -125,11 +135,17 @@ def curate_corpus(
 
     # 4. quality: Gopher repetition pass flag + CCNet perplexity tertile
     #    (trained on the surviving corpus itself — the self-scoring setup).
+    #    The LM stage reads `survivors` once per trigram stream, vocab,
+    #    outer side and join-back, and its model and quality boundaries
+    #    run as separate executions, so the repetition pass is persisted
+    #    to run once per call (`fuzzy` already is).
     survivors = fuzzy
     if require_repetition_pass:
         rep = repetition_signals(survivors, text_col=text_col, id_col=id_col)
-        survivors = survivors.join(
-            rep.filter(F.col("repetition_pass")).select(id_col), id_col
+        survivors = _persist_tracked(
+            survivors.join(
+                rep.filter(F.col("repetition_pass")).select(id_col), id_col
+            )
         )
     scored = score_docs(survivors, text_col=text_col, id_col=id_col).join(
         survivors.select(id_col, lang_col, text_col), id_col
@@ -142,18 +158,16 @@ def curate_corpus(
     quality = bucketed.filter(
         F.col("ppl_bucket_label").isin(*keep_ppl_buckets)
     ).select(id_col, lang_col, text_col)
-    # r14 round-close (guide §3.3): localCheckpoint, not persist — the
-    # LM-scored lineage above this boundary is a ~770 KB logical plan
-    # (the model/training subtrees copy per reference; trees, not DAGs),
-    # and the mixture join below references `quality` TWICE (corpus side
-    # + rates aggregate), so every downstream action re-canonicalized a
-    # ~1.5 MB tree on the driver (measured: the mixture stage cost 13 s
-    # of which <1 s was execution). Checkpointing truncates the plan to
-    # a LogicalRDD — the local stand-in for the 100 TB stage-boundary
-    # parquet write this docstring already documents. Lazy: the stage
-    # count below materializes it.
-    # r15 (VERDICT r14 #7): durability-switchable boundary — see
-    # manifold_spark/plans/boundary.py (local default unchanged).
+    # A stage boundary, not persist: the LM-scored lineage above is a
+    # ~770 KB logical plan (the model/training subtrees copy per
+    # reference; trees, not DAGs), and the mixture join below references
+    # `quality` TWICE (corpus side + rates aggregate), so every downstream
+    # action re-canonicalized a ~1.5 MB tree on the driver (measured: the
+    # mixture stage cost 13 s of which <1 s was execution). Truncating
+    # the plan is the local stand-in for the 100 TB stage-boundary
+    # parquet write. Under AQE the boundary runs the scoring shuffles at
+    # this call; the stage count below runs the final stage and stores
+    # the blocks (see plans/boundary.py).
     from manifold_spark.plans.boundary import stage_boundary
 
     quality = stage_boundary(quality, "curation-quality")

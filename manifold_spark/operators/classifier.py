@@ -83,13 +83,6 @@ def feature_grams_from(toks: Column) -> Column:
     return F.concat(word_grams(toks, 1), word_grams(toks, 2))
 
 
-def feature_grams(text: Column) -> Column:
-    """Unigrams + word bigrams over the shared dedup tokenizer. Prefer
-    `feature_grams_from` over a staged token column in per-corpus plans
-    (see its r14 note)."""
-    return feature_grams_from(normalized_tokens(text))
-
-
 def _bucket(gram: Column, n_buckets: int) -> Column:
     return (stable_long_hash(gram, seed=FEATURE_SEED) % n_buckets).cast("long")
 

@@ -39,27 +39,36 @@ from pyspark.sql import functions as F
 from manifold_spark.functions.hashing import stable_long_hash
 from manifold_spark.plans.parallelism import ensure_parallelism
 
-#: DataFrames persisted by the pair generators below. The exploded shingle
-#: diamond must be cached WITHIN a query (3 consumers), but the operators
-#: return lazy plans, so they cannot unpersist before the caller consumes
-#: them. Long-lived sessions (bench loops, notebooks) call
+#: Caches the operators create: DataFrames persisted by the pair
+#: generators below (and other stages), plus the blocks of local stage
+#: boundaries (`plans.boundary`). The exploded shingle diamond must be
+#: cached WITHIN a query (3 consumers), but the operators return lazy
+#: plans, so they cannot unpersist before the caller consumes them.
+#: Long-lived sessions (bench loops, notebooks) call
 #: `release_shingle_caches()` between queries instead of relying on LRU
 #: eviction under memory pressure.
-_SHINGLE_CACHES: list[DataFrame] = []
+_SHINGLE_CACHES: list = []
 
 
 def _persist_tracked(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    _SHINGLE_CACHES.append(df)
-    return df
+    return _track(df.persist())
+
+
+def _track(cache):
+    """Register anything with an ``unpersist()`` method (a persisted
+    frame, a local checkpoint's blocks) for release by the registry."""
+    _SHINGLE_CACHES.append(cache)
+    return cache
 
 
 def release_shingle_caches() -> int:
-    """Unpersist every cache created by the dedup pair generators; returns
-    how many were released. Safe to call at any time — plans re-cache on
-    next use. Prefer the `operator_cache_scope()` context manager where
-    the cache lifetime has clear lexical scope (bench tiers, tests);
-    this function remains the escape hatch for everything else."""
+    """Unpersist every cache in the operator-cache registry; returns how
+    many were released. Persisted frames re-cache on next use; a frame
+    read through a local stage boundary cannot be read again, so release
+    only after its consumers ran. Prefer the `operator_cache_scope()`
+    context manager where the cache lifetime has clear lexical scope
+    (bench tiers, tests); this function remains the escape hatch for
+    everything else."""
     n = 0
     while _SHINGLE_CACHES:
         df = _SHINGLE_CACHES.pop()
@@ -205,25 +214,6 @@ def shingle_rows(df: DataFrame, text_col: str, id_col: str, shingle_n: int) -> D
         "doc_id",
         F.explode(word_shingles(F.col("__toks"), shingle_n)).alias("shingle"),
     )
-
-
-def minhash_signature(shingles: Column, num_perm: int = 24) -> Column:
-    """Array-form MinHash signature for a shingles column (small-data /
-    single-doc convenience; the corpus path uses `shingle_rows` +
-    aggregation in `minhash_lsh_pairs` instead)."""
-    perms = _permutation_constants(num_perm)
-    hashes = F.transform(shingles, lambda s: stable_long_hash(s) % _MERSENNE)
-    return F.array(
-        *[
-            F.array_min(F.transform(hashes, _permute(a, b)))
-            for (a, b) in perms
-        ]
-    )
-
-
-def _permute(a: int, b: int):
-    # closure capture — see the arity note on `bit_merge`.
-    return lambda h: (F.lit(a) * h + F.lit(b)) % _MERSENNE
 
 
 def _minhash_sigs(sh: DataFrame, num_perm: int) -> DataFrame:

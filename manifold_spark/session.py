@@ -92,14 +92,3 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def configure_s3(spark: SparkSession, access_key: str, secret_key: str, endpoint: str | None = None) -> SparkSession:
-    """Wire S3A credentials into the Hadoop conf (reference S4,
-    `el_to_parquet.py:17-38`). No-op cost locally; kept for API parity."""
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    hconf.set("fs.s3a.access.key", access_key)
-    hconf.set("fs.s3a.secret.key", secret_key)
-    if endpoint:
-        hconf.set("fs.s3a.endpoint", endpoint)
-    return spark

@@ -5,21 +5,20 @@ operators composed clean → exact dedup → fuzzy dedup → quality → mixture
 
 from __future__ import annotations
 
-import pytest
-
-# r15 slow tier (VERDICT r14 #2): full curation pipeline compositions —
-# excluded from the default (driver-verify) run by pytest.ini's
-# `-m "not slow"`; run with `-m slow` (round-close evidence in
-# OPTIMIZATION_r15.md).
-pytestmark = pytest.mark.slow
-
 import gc
+import random
 
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from manifold_spark.curation import curate_corpus
-from manifold_spark.operators.dedup import release_shingle_caches
+from manifold_spark.operators.dedup import operator_cache_scope, release_shingle_caches
+
+# The full pipeline compositions over the test-data corpus are the slow
+# tier (`-m slow`; pytest.ini's default run excludes them). The cache
+# tests below run `curate_corpus` on a few dozen in-memory documents and
+# stay in the default run.
 
 
 @pytest.fixture(autouse=True)
@@ -37,6 +36,7 @@ def _reclaim_jvm_memory(spark):
     spark.sparkContext._jvm.System.gc()
 
 
+@pytest.mark.slow
 def test_curate_corpus_end_to_end(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     # give the exact-dedup stage real work: duplicate every 10th doc
@@ -73,6 +73,7 @@ def test_curate_corpus_end_to_end(spark, sf_dir):
         assert sum(toks) - max(toks) < 256, (shard, b, toks)
 
 
+@pytest.mark.slow
 def test_curate_corpus_deterministic(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     a, ra = curate_corpus(docs, pack_budget=256)
@@ -85,6 +86,7 @@ def test_curate_corpus_deterministic(spark, sf_dir):
     assert rows_a == rows_b
 
 
+@pytest.mark.slow
 def test_incremental_curation_batch_split_invariant(spark, sf_dir, tmp_path):
     """The incremental twin's contract: feeding the corpus as ONE batch
     or as any id-ordered split yields the SAME kept id set and the same
@@ -96,7 +98,6 @@ def test_incremental_curation_batch_split_invariant(spark, sf_dir, tmp_path):
     blocks in the shared test JVM and starved later tests of execution
     memory in the full-suite run."""
     from manifold_spark.curation import curate_batch_incremental, curation_models
-    from manifold_spark.operators.dedup import operator_cache_scope
 
     docs = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -160,6 +161,7 @@ def test_incremental_curation_batch_split_invariant(spark, sf_dir, tmp_path):
     assert one_report["packed"] > 0
 
 
+@pytest.mark.slow
 def test_checkpoint_curation_state_roundtrip(spark):
     """`checkpoint_curation_state` (the in-memory lineage truncation for
     notebook-style loops) must preserve state contents exactly and drop
@@ -170,7 +172,6 @@ def test_checkpoint_curation_state_roundtrip(spark):
         curate_batch_incremental,
         curation_models,
     )
-    from manifold_spark.operators.dedup import operator_cache_scope
 
     docs = spark.createDataFrame(
         [(i, "en", f"alpha beta gamma delta epsilon tok{i}") for i in range(20)],
@@ -200,3 +201,65 @@ def test_checkpoint_curation_state_roundtrip(spark):
             sorted(map(tuple, cp["minhash"]["sizes"].collect()))
             == before["sizes"]
         )
+
+
+def _small_corpus(spark):
+    """A few dozen documents that engage every stage: exact copies for
+    exact dedup, and documents of one repeated line, which fail the
+    repetition pass."""
+    rng = random.Random(7)
+    words = (
+        "spark window merge table column vector stream value data small "
+        "join filter big group hash sort order scan batch key"
+    ).split()
+    rows = [
+        (i, " ".join(rng.choice(words) for _ in range(rng.randint(8, 30))) + ".",
+         rng.choice(["en", "de"]))
+        for i in range(40)
+    ]
+    rows += [(100 + i, text, lang) for i, text, lang in rows[::10]]
+    rows += [(200 + i, "\n".join(["the same line again."] * 6), "en") for i in range(4)]
+    return spark.createDataFrame(rows, "doc_id long, text string, lang string")
+
+
+@pytest.mark.parametrize("require_repetition_pass", [True, False])
+def test_curate_corpus_caches_lm_input(spark, monkeypatch, require_repetition_pass):
+    """The LM stage reads its input in several executions (training,
+    scoring, the join-back), so `score_docs` must get a cached frame —
+    otherwise the repetition pass reruns once per read."""
+    import manifold_spark.operators.lm as lm
+
+    seen = []
+    score_docs = lm.score_docs
+
+    def spy(docs, *args, **kwargs):
+        seen.append(docs.storageLevel)
+        return score_docs(docs, *args, **kwargs)
+
+    monkeypatch.setattr(lm, "score_docs", spy)
+    with operator_cache_scope():
+        packed, report = curate_corpus(
+            _small_corpus(spark), require_repetition_pass=require_repetition_pass
+        )
+        assert packed.count() == report["packed"] > 0
+    assert len(seen) == 1
+    assert seen[0] != StorageLevel.NONE
+
+
+def test_curate_corpus_releases_its_caches(spark):
+    """Every RDD `curate_corpus` persists — stage caches and the local
+    checkpoints of its stage boundaries — is released when the enclosing
+    `operator_cache_scope()` exits. Compared by id, so RDDs of earlier
+    tests that the context cleaner frees meanwhile do not count."""
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+
+    def rdd_ids():
+        return set(persistent().keySet().toArray())
+
+    docs = _small_corpus(spark)
+    before = rdd_ids()
+    with operator_cache_scope():
+        packed, report = curate_corpus(docs)
+        assert packed.count() == report["packed"] > 0
+        assert rdd_ids() - before
+    assert rdd_ids() - before == set()

@@ -122,3 +122,50 @@ def test_distributed_surrogate_keys_dense_and_layout_independent(spark):
         out = scd2.assign_surrogate_keys_distributed(other, "sk", ["g", "n"], offset=100)
         m = {(r["g"], r["n"]): r["sk"] for r in out.collect()}
         assert m == m1  # layout-independent assignment
+
+
+def test_changed_flag_total_with_empty_hash_sets(spark):
+    """An all-NULL hash on one side leaves that side's distinct-hash set
+    empty. The changed flag must not index into it (ANSI raises on an
+    out-of-range `element_at`), whichever order the optimizer evaluates
+    the conjuncts in: the rows are the same with subexpression
+    elimination on and off. NULL-hash keys are left untouched, and a
+    NULL-hash new key is inserted."""
+    null_hash = F.lit(None).cast("string")
+    week1 = _base(spark, [("A", "x"), ("B", "y"), ("C", "z"), ("D", "w")])
+    dim1 = scd2.scd2_merge(None, week1, "broker_id", ["broker"], "2024-01-01")
+    dim1 = dim1.withColumn(
+        "hash",
+        F.when(F.col("broker").isin("A", "C"), null_hash).otherwise(F.col("hash")),
+    )
+    dim1 = spark.createDataFrame(dim1.collect(), dim1.schema)
+    week2 = _base(
+        spark, [("A", "x"), ("B", "y2"), ("C", "z2"), ("D", "w2"), ("E", "v")]
+    ).withColumn(
+        "hash",
+        F.when(F.col("broker").isin("B", "C", "E"), null_hash).otherwise(F.col("hash")),
+    )
+    expected = [
+        ("A", "x", False, dt.date(2024, 1, 1), SENTINEL),
+        ("B", "y", True, dt.date(2024, 1, 1), SENTINEL),
+        ("C", "z", False, dt.date(2024, 1, 1), SENTINEL),
+        ("D", "w", True, dt.date(2024, 1, 1), dt.date(2024, 1, 7)),
+        ("D", "w2", True, dt.date(2024, 1, 8), SENTINEL),
+        ("E", "v", False, dt.date(2024, 1, 8), SENTINEL),
+    ]
+    conf = "spark.sql.subexpressionElimination.enabled"
+    saved = {k: spark.conf.get(k) for k in (conf, "spark.sql.ansi.enabled")}
+    try:
+        spark.conf.set("spark.sql.ansi.enabled", "true")
+        for enabled in ("true", "false"):
+            spark.conf.set(conf, enabled)
+            dim2 = scd2.scd2_merge(dim1, week2, "broker_id", ["broker"], "2024-01-08")
+            rows = sorted(
+                (r["broker"], r["city"], r["hash"] is not None,
+                 r["record_start_date"], r["record_end_date"])
+                for r in dim2.collect()
+            )
+            assert rows == expected, enabled
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
