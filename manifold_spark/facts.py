@@ -79,7 +79,7 @@ def load_fact_stock(
     # dims, but assigned DISTRIBUTED (hash-bucketed row_number + bucket
     # offsets) — the weekly batch is ~50M rows at reference scale and must
     # not funnel through a single-partition sort. Re-runs of a week replace
-    # the week's date_id partition (idempotent mode in pipeline).
+    # the week's date_id partition (the pipeline's partition overwrite).
     from manifold_spark.scd2 import assign_surrogate_keys_distributed
 
     return assign_surrogate_keys_distributed(

@@ -197,17 +197,9 @@ _NGRAM_JACCARD_ORACLE = f"""
 
 @register("dedup_ngram_jaccard", _NGRAM_JACCARD_ORACLE)
 def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # df_cap_strategy="window" here (VERDICT r6 #3): warm-vs-warm A/B on
-    # the r7 host, 3 rounds at 10× and 2 at 1×, window won every round
-    # (10×: 13.1/14.5/13.5 vs 17.1/15.4/16.1 s; 1×: 2.9/3.0 vs 4.0/3.8 s)
-    # — on local[N] the in-memory window pass beats the extra aggregate +
-    # broadcast round-trip. Result-identical either way (both produce the
-    # same capped pair set the oracle models); the OPERATOR default stays
-    # "stoplist", the cluster-scale plan (shuffles map-side-combined
-    # counts, not a sort of every exploded shingle row — SCALING.md).
     return dedup.ngram_jaccard_pairs(
         _t(spark, sf_dir, "documents"), "text", "doc_id", ["lang", "source"],
-        threshold=0.1, max_df=NGRAM_MAX_DF, df_cap_strategy="window",
+        threshold=0.1, max_df=NGRAM_MAX_DF,
     )
 
 
@@ -266,8 +258,8 @@ def _components_oracle() -> str:
     """Transitive closure of the minhash near-dup graph as a recursive
     CTE: reach(id, r) starts from self-reach for every document plus the
     symmetric pair edges, extends one hop per recursion, and the cluster
-    id is the min reachable id — the same fixpoint min-label propagation
-    converges to."""
+    id is the min reachable id — the same fixpoint `dedup_components`
+    reaches."""
     pairs_sql = _minhash_oracle()
     return f"""
     WITH RECURSIVE pairs AS (
@@ -540,10 +532,9 @@ _CHAIN_CTE = f"""
 )
 def q_dedup_clusters_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components on an adversarially DEEP graph: CHAIN_N (8)
-    disjoint path graphs of diameter ~corpus/CHAIN_N (≈62 at 500 docs)
-    — label propagation's O(diameter) rounds would blow its budget
-    (pinned by a ComponentsNotConverged test), so this gate routes to
-    star contraction, whose O(log n) rounds converge in single digits.
+    disjoint path graphs of diameter ~corpus/CHAIN_N (≈62 at 500 docs).
+    ``small_graph_edges=0`` sends it to star contraction, whose O(log n)
+    rounds converge in single digits regardless of diameter.
     Pairs come from EXACT n-gram Jaccard (no LSH recall noise), and the
     oracle walks the same graph with a recursive CTE."""
     ch = chain_corpus(_t(spark, sf_dir, "documents").select("doc_id"))
@@ -551,7 +542,7 @@ def q_dedup_clusters_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
         ch.withColumn("blk", F.lit(1)), "text", "doc_id", ["blk"], threshold=0.3
     )
     return dedup.dedup_components(
-        ch.select("doc_id"), pairs, backend="star", assume_unique_ids=True
+        ch.select("doc_id"), pairs, small_graph_edges=0, assume_unique_ids=True
     )
 
 

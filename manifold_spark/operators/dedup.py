@@ -285,25 +285,49 @@ def _verify_candidates(
 
 def _bucket_candidate_pairs(
     entries: DataFrame,
-    bucket_cols: list[str],
     id_col: str,
     max_bucket: int,
+    diagnostics: dict | None = None,
 ) -> DataFrame:
-    """Distinct candidate pairs (id_a < id_b) from LSH bucket entries,
-    formed in ONE pass over the entries (r14 round-close, guide §2.4):
-    a window count per bucket gates the skew cap, the surviving entries
+    """Distinct candidate pairs (id_a < id_b) from (id, band, key) LSH
+    bucket entries, formed in ONE pass over the entries (guide §2.4): a
+    window count per bucket gates the skew cap, the surviving entries
     group into per-bucket id lists (the groupBy reuses the window's
-    (bucket) hash partitioning — no second exchange), and the i<j pairs
-    explode SCAN-SIDE from each ≤``max_bucket`` list. The former shape —
-    count-aggregate → cap join → entries⋈entries self-join — shuffled
-    the entry relation three times and sorted it twice; values are
-    identical (same capped buckets, same unordered pair set, pinned by
-    the untouched oracle gates).
+    (band, key) hash partitioning — no second exchange), and the i<j
+    pairs explode SCAN-SIDE from each ≤``max_bucket`` list.
 
     Skew safety at 100 TB: the cap filter runs BEFORE any list
     materializes, and the window buffer (one bucket at a time) spills;
-    a pathological million-doc bucket never builds aggregation state —
-    the property the old count-first plan was built for, preserved."""
+    a pathological million-doc bucket never builds aggregation state.
+
+    ``diagnostics``: when a dict is passed, fill it with the bucket-cap
+    telemetry shared by every banded-LSH operator (bucket count, band
+    entries, max bucket size, buckets and entries over the cap, the
+    post-cap pair-formation bound, the cap itself and the distinct
+    candidate-pair count). Two extra Spark actions, and the candidates
+    persist through the operator-cache registry — bench/ops tooling
+    only; the production path (None) runs neither."""
+    bucket_cols = ["band", "key"]
+    if diagnostics is not None:
+        n = F.col("n")
+        stats = (
+            entries.groupBy(*bucket_cols)
+            .agg(F.count(F.lit(1)).alias("n"))
+            .agg(
+                F.count(F.lit(1)).alias("n_buckets"),
+                F.sum(n).alias("n_band_entries"),
+                F.max(n).alias("max_bucket_size"),
+                F.count(F.when(n > max_bucket, F.lit(1))).alias("buckets_over_cap"),
+                F.coalesce(F.sum(F.when(n > max_bucket, n)), F.lit(0)).alias(
+                    "entries_dropped_by_cap"
+                ),
+                F.coalesce(
+                    F.sum(F.when(n <= max_bucket, (n * (n - 1)) / 2)), F.lit(0)
+                ).cast("long").alias("pair_formation_bound"),
+            )
+            .collect()[0]
+        )
+        diagnostics.update(stats.asDict(), max_bucket_cap=max_bucket)
     w = Window.partitionBy(*bucket_cols)
     bounded = entries.withColumn("__bn", F.count(F.lit(1)).over(w)).filter(
         F.col("__bn") <= max_bucket
@@ -320,13 +344,69 @@ def _bucket_candidate_pairs(
             ),
         )
     )
-    return (
+    candidates = (
         bounded.groupBy(*bucket_cols)
         .agg(F.collect_list(id_col).alias("__ids"))
         .select(F.explode(pair_structs).alias("__p"))
         .select("__p.id_a", "__p.id_b")
         .distinct()
     )
+    if diagnostics is not None:
+        candidates = _persist_tracked(candidates)
+        diagnostics["candidate_pairs"] = candidates.count()
+    return candidates
+
+
+def _streaming_cap_candidates(
+    new_entries: DataFrame,
+    old_entries: DataFrame | None,
+    id_col: str,
+    max_bucket: int,
+) -> DataFrame:
+    """Distinct candidate pairs (id_a < id_b) for one batch of an
+    incremental LSH index — the STREAMING cap shared by
+    `minhash_index_upsert`, `minhash_index_probe` and
+    `similarity.rp_lsh_index_upsert`. Entries are (id_col, band, key);
+    ``old_entries`` is None when the index is empty.
+
+    - Each bucket is capped on its post-batch size (old ∪ new entries);
+      only in-cap buckets pair.
+    - new⋈new pairs once (a.id < b.id).
+    - new⋈old pairs in both orientations (least/greatest of the two ids).
+    - old⋈old never pairs: earlier batches emitted those pairs."""
+    bucket = ["band", "key"]
+    all_entries = (
+        new_entries if old_entries is None else old_entries.unionByName(new_entries)
+    )
+    ok_buckets = (
+        all_entries.groupBy(*bucket)
+        .agg(F.count(F.lit(1)).alias("n"))
+        .filter(F.col("n") <= max_bucket)
+        .select(*bucket)
+    )
+    new_b = new_entries.join(ok_buckets, bucket)
+
+    def same_bucket(x: str, y: str) -> Column:
+        return (F.col(f"{x}.band") == F.col(f"{y}.band")) & (
+            F.col(f"{x}.key") == F.col(f"{y}.key")
+        )
+
+    a, b = F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
+    cand = new_b.alias("a").join(
+        new_b.alias("b"), same_bucket("a", "b") & (a < b)
+    ).select(a.alias("id_a"), b.alias("id_b"))
+    if old_entries is not None:
+        o, n = F.col(f"o.{id_col}"), F.col(f"n.{id_col}")
+        cross = (
+            old_entries.join(ok_buckets, bucket)
+            .alias("o")
+            # id-disjoint batches are the contract; guard anyway so a
+            # violating caller gets no self-pairs rather than corrupt output
+            .join(new_b.alias("n"), same_bucket("o", "n") & (o != n))
+            .select(F.least(o, n).alias("id_a"), F.greatest(o, n).alias("id_b"))
+        )
+        cand = cand.unionByName(cross)
+    return cand.distinct()
 
 
 def minhash_lsh_pairs(
@@ -385,7 +465,7 @@ def minhash_lsh_pairs(
         )
     )
     # r14: persist the signatures too — sigs feed the band entries (twice,
-    # via the candidate self-join), the bucket-size aggregate above them,
+    # via the candidate self-join), the diagnostics bucket-size aggregate,
     # and the two size joins of the verify, so the num_perm-min aggregate
     # re-ran per consumer (6 doc_id exchanges in the r13 before-plan;
     # AQE ReusedExchange dedupes the shuffle write but each consumer still
@@ -395,41 +475,9 @@ def minhash_lsh_pairs(
     band_entries = _minhash_band_entries(sigs, num_perm, bands)
 
     # Skew guard: drop pathological buckets (boilerplate shared by
-    # thousands of docs explodes quadratically otherwise). The cap gate
-    # + pair formation is the one-shuffle `_bucket_candidate_pairs`
-    # (r14); the standalone count aggregate below exists only for the
-    # diagnostics telemetry (extra actions, documented).
-    if diagnostics is not None:
-        bucket_sizes = _persist_tracked(
-            band_entries.groupBy("band", "key").agg(F.count(F.lit(1)).alias("n"))
-        )
-        stats = bucket_sizes.agg(
-            F.count(F.lit(1)).alias("n_buckets"),
-            F.sum("n").alias("n_band_entries"),
-            F.max("n").alias("max_bucket_size"),
-            F.count(F.when(F.col("n") > max_bucket, F.lit(1))).alias("buckets_over_cap"),
-            F.coalesce(
-                F.sum(F.when(F.col("n") > max_bucket, F.col("n"))), F.lit(0)
-            ).alias("entries_dropped_by_cap"),
-            F.coalesce(
-                F.sum(
-                    F.when(
-                        F.col("n") <= max_bucket,
-                        (F.col("n") * (F.col("n") - 1)) / 2,
-                    )
-                ),
-                F.lit(0),
-            ).cast("long").alias("pair_formation_bound"),
-        ).collect()[0]
-        diagnostics.update(
-            {k: stats[k] for k in stats.asDict()}, max_bucket_cap=max_bucket
-        )
-    candidates = _bucket_candidate_pairs(
-        band_entries, ["band", "key"], "doc_id", max_bucket
-    )
-    if diagnostics is not None:
-        candidates = _persist_tracked(candidates)
-        diagnostics["candidate_pairs"] = candidates.count()
+    # thousands of docs explodes quadratically otherwise) inside the
+    # one-shuffle cap gate + pair formation.
+    candidates = _bucket_candidate_pairs(band_entries, "doc_id", max_bucket, diagnostics)
 
     # Exact-Jaccard verify via sparse intersection counts: candidate pairs
     # (tiny) are broadcast against the hashed shingle rows; |A∩B| comes
@@ -530,42 +578,9 @@ def minhash_index_upsert(
         all_sh = index["shingles"].unionByName(b_index["shingles"])
         all_sizes = index["sizes"].unionByName(b_index["sizes"])
 
-    # Cap on CURRENT (post-batch) bucket sizes; only in-cap buckets pair.
-    ok_buckets = (
-        all_entries.groupBy("band", "key")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") <= max_bucket)
-        .select("band", "key")
+    candidates = _streaming_cap_candidates(
+        b_index["entries"], old_entries, "doc_id", max_bucket
     )
-    new_b = b_index["entries"].join(ok_buckets, ["band", "key"])
-
-    # Candidates with ≥1 batch side: new⋈new ordered one way plus
-    # new⋈old both ways — never old⋈old (those pairs were emitted by
-    # earlier batches).
-    nb_a, nb_b = new_b.alias("a"), new_b.alias("b")
-    cand = nb_a.join(
-        nb_b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.key") == F.col("b.key"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-    if old_entries is not None:
-        old_b = old_entries.join(ok_buckets, ["band", "key"])
-        o, n = old_b.alias("o"), new_b.alias("n")
-        cross = o.join(
-            n,
-            (F.col("o.band") == F.col("n.band"))
-            & (F.col("o.key") == F.col("n.key"))
-            # id-disjoint batches are the contract; guard anyway so a
-            # violating caller gets no self-pairs rather than corrupt output
-            & (F.col("o.doc_id") != F.col("n.doc_id")),
-        ).select(
-            F.least(F.col("o.doc_id"), F.col("n.doc_id")).alias("id_a"),
-            F.greatest(F.col("o.doc_id"), F.col("n.doc_id")).alias("id_b"),
-        )
-        cand = cand.unionByName(cross)
-    candidates = cand.distinct()
-
     pairs = _verify_candidates(candidates, all_sh, all_sizes, threshold)
     return pairs, {"entries": all_entries, "shingles": all_sh, "sizes": all_sizes}
 
@@ -587,8 +602,8 @@ def minhash_index_probe(
       for buckets the batch TOUCHES (or None when the state is empty).
       Correctness needs every state entry of each touched bucket and
       nothing else: untouched buckets cannot form a candidate with the
-      batch, and their cap counts are never consulted (`new_b` only holds
-      batch entries, so over/under-cap status of an untouched bucket is
+      batch, and their cap counts are never consulted (only batch
+      entries pair, so over/under-cap status of an untouched bucket is
       unobservable). O(touched buckets), not O(history).
     - ``read_doc_state(old_ids)`` → (shingles, sizes) restricted to the
       given OLD-side candidate doc ids. The verify join only reads
@@ -596,10 +611,9 @@ def minhash_index_probe(
       pair-formation bound — O(candidates), independent of history.
 
     Pair-emission contract is IDENTICAL to `minhash_index_upsert` with
-    the same ``max_bucket`` (streaming-cap semantics; pinned equal —
-    including with an ENGAGING cap — in
-    tests/test_curation_state.py::test_probe_matches_upsert_pairs): pairs
-    with ≥1 batch side, cap on current post-batch bucket sizes. One
+    the same ``max_bucket``: both form candidates with
+    `_streaming_cap_candidates` (pairs with ≥1 batch side, cap on current
+    post-batch bucket sizes). One
     extra driver action collects the old-side candidate ids (bounded as
     above).
 
@@ -607,39 +621,9 @@ def minhash_index_probe(
     append of ``b_index`` itself (the store's delta shape)."""
     b_entries = b_index["entries"]
     old_entries = read_entries(b_entries)
-    all_entries = (
-        b_entries if old_entries is None else old_entries.unionByName(b_entries)
+    candidates = _persist_tracked(
+        _streaming_cap_candidates(b_entries, old_entries, "doc_id", max_bucket)
     )
-
-    ok_buckets = (
-        all_entries.groupBy("band", "key")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") <= max_bucket)
-        .select("band", "key")
-    )
-    new_b = b_entries.join(ok_buckets, ["band", "key"])
-
-    nb_a, nb_b = new_b.alias("a"), new_b.alias("b")
-    cand = nb_a.join(
-        nb_b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.key") == F.col("b.key"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-    if old_entries is not None:
-        old_b = old_entries.join(ok_buckets, ["band", "key"])
-        o, n = old_b.alias("o"), new_b.alias("n")
-        cross = o.join(
-            n,
-            (F.col("o.band") == F.col("n.band"))
-            & (F.col("o.key") == F.col("n.key"))
-            & (F.col("o.doc_id") != F.col("n.doc_id")),
-        ).select(
-            F.least(F.col("o.doc_id"), F.col("n.doc_id")).alias("id_a"),
-            F.greatest(F.col("o.doc_id"), F.col("n.doc_id")).alias("id_b"),
-        )
-        cand = cand.unionByName(cross)
-    candidates = _persist_tracked(cand.distinct())
 
     b_sh, b_sizes = b_index["shingles"], b_index["sizes"]
     all_sh, all_sizes = b_sh, b_sizes
@@ -826,7 +810,6 @@ def ngram_jaccard_pairs(
     threshold: float = 0.1,
     max_df: int | None = None,
     diagnostics: dict | None = None,
-    df_cap_strategy: str = "stoplist",
 ) -> DataFrame:
     """EXACT n-gram Jaccard for every pair inside a blocking key (e.g.
     (lang, source)) with `jaccard >= threshold > 0`. The oracle-checkable
@@ -849,19 +832,13 @@ def ngram_jaccard_pairs(
     O(max_df²) pairs at the cost of ignoring boilerplate overlap. Docs
     left with zero shingles drop out.
 
-    The cap is applied as a broadcast STOP-LIST by default (r6,
-    ``df_cap_strategy="stoplist"``): one aggregate over the cached
-    shingle rows finds the over-cap (block, hash) keys — its output is
-    tiny (≤ shingle_rows / max_df keys by pigeonhole) — and a broadcast
-    left-anti join removes them. vs the count-window
-    (``df_cap_strategy="window"``): the aggregate shuffles pre-reduced
-    map-side-combined counts instead of sorting EVERY exploded row
-    inside window partitions, and the capped rows never carry a dfreq
-    column. The window variant remains the fallback for a corpus so
-    boilerplate-ridden that the stop-list itself outgrows broadcast
-    range (≳10⁷ over-cap keys) — though at that point the corpus needs
-    cleaning more than a bigger hash table. Both strategies drop the
-    identical shingle set.
+    The cap is applied as a broadcast STOP-LIST: one aggregate over the
+    cached shingle rows finds the over-cap (block, hash) keys — its
+    output is tiny (≤ shingle_rows / max_df keys by pigeonhole) — and a
+    broadcast left-anti join removes them. The aggregate shuffles
+    pre-reduced map-side-combined counts instead of sorting EVERY
+    exploded row inside window partitions, and the capped rows never
+    carry a dfreq column.
 
     Pass ``diagnostics={}`` to record cap telemetry (distinct shingle
     keys, max document frequency observed, keys over the cap, shingle
@@ -870,7 +847,7 @@ def ngram_jaccard_pairs(
     The shingle STRING never shuffles: each shingle maps once (codegen'd
     md5) to a 63-bit long (`stable_long_hash` — the same engine-portable
     hash minhash uses, mirrored in the oracle by `_stable_hash_sql`), so
-    the df-count window and the self-join carry an 8-byte key instead of
+    the df-count aggregate and the self-join carry an 8-byte key instead of
     a ~25-byte string. Distinctness per doc is enforced on the shingle
     STRING (array_distinct in `word_shingles`) before hashing, so a
     within-doc 63-bit collision (≈ n²/2⁶⁴) yields duplicate h rows for
@@ -910,25 +887,8 @@ def ngram_jaccard_pairs(
                 ).alias("rows_dropped_by_cap"),
             ).collect()[0]
             diagnostics.update({k: stats[k] for k in stats.asDict()}, max_df_cap=max_df)
-        if df_cap_strategy == "stoplist":
-            stop = key_counts.filter(F.col("dfreq") > max_df).select(*block_cols, "h")
-            ex = ex.join(F.broadcast(stop), [*block_cols, "h"], "left_anti")
-        elif df_cap_strategy == "window":
-            from pyspark.sql import Window
-
-            w = Window.partitionBy(*block_cols, "h")
-            # r14: persist the CAPPED rows too — the window pass fed all
-            # three consumers lazily, so the exchange+sort+count-window
-            # re-executed per consumer (4× in the gate's before-plan,
-            # plans/r14/dedup_ngram_jaccard_before.txt). One tracked
-            # cache build; identical capped row set.
-            ex = _persist_tracked(
-                ex.withColumn("dfreq", F.count(F.lit(1)).over(w))
-                .filter(F.col("dfreq") <= max_df)
-                .drop("dfreq")
-            )
-        else:  # pragma: no cover - caller bug
-            raise ValueError(f"unknown df_cap_strategy: {df_cap_strategy!r}")
+        stop = key_counts.filter(F.col("dfreq") > max_df).select(*block_cols, "h")
+        ex = ex.join(F.broadcast(stop), [*block_cols, "h"], "left_anti")
     sizes = ex.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
 
     a = ex.select(*block_cols, F.col("doc_id").alias("id_a"), "h")
@@ -948,23 +908,19 @@ def ngram_jaccard_pairs(
     )
 
 
-#: Telemetry from the most recent `dedup_components` call: which backend
-#: ran and how many iteration rounds (== driver-blocking Spark actions in
-#: the loop) it took. Tests pin this so the convergence-loop cost can't
-#: silently regress; ops dashboards can read it after a run.
-#: NOTE (ADVICE r13): since r13 each counted round advances TWO
-#: propagation hops (label backend) / two contractions (star backend),
-#: so ``rounds`` is barriers, not hops — pre-r13 values are comparable
-#: only after doubling, and ``max_iters`` budgets up to 2·max_iters
-#: hops of work per call.
+#: Telemetry from the most recent `dedup_components` call: which route
+#: ran (``"driver"`` or ``"star"``) and how many star rounds it took.
+#: One round = one barrier (one Spark action) = two contractions. Tests
+#: pin it so the loop cost cannot silently regress; ops dashboards can
+#: read it after a run.
 LAST_COMPONENTS_INFO: dict = {"backend": None, "rounds": 0}
 
 
 class ComponentsNotConverged(RuntimeError):
-    """Raised when label propagation hits ``max_iters`` with labels still
-    changing — returning partial labels would silently disagree with the
-    transitive closure. Deep chained-duplicate graphs should use
-    ``backend="star"`` (O(log n) rounds) instead of raising ``max_iters``."""
+    """Raised when star contraction is not at its fixed point after
+    ``max_iters`` rounds — returning partial labels would silently
+    disagree with the transitive closure. Star needs O(log n) rounds, so
+    this means ``max_iters`` is far below what the graph needs."""
 
 
 def dedup_components(
@@ -973,7 +929,6 @@ def dedup_components(
     id_col: str = "doc_id",
     pair_cols: tuple[str, str] = ("id_a", "id_b"),
     max_iters: int = 20,
-    backend: str = "auto",
     small_graph_edges: int = 500_000,
     assume_unique_ids: bool = False,
 ) -> DataFrame:
@@ -984,88 +939,50 @@ def dedup_components(
     near-dup is transitive in practice (A≈B≈C), so survivors must be
     picked per component, not per pair.
 
-    The iteration runs ONLY over nodes that appear in at least one pair:
-    a node with no edges can never change its label, so the corpus-sized
-    id set stays out of the loop entirely — each round shuffles a table
-    the size of the duplicate-graph node set (a small fraction of a
-    deduplicated corpus), and the untouched singletons are attached with
-    one anti-join at the end. At 100 TB that is the difference between
-    per-round corpus shuffles and per-round near-dup-graph shuffles.
+    Only nodes that appear in at least one pair enter the computation: a
+    node with no edges can never change its label, so the corpus-sized id
+    set stays out of it entirely, and the untouched singletons are
+    attached with one anti-join at the end. At 100 TB that is the
+    difference between per-round corpus shuffles and per-round
+    near-dup-graph shuffles.
 
-    Backends:
+    Routing: the directed pair set is counted once (the same action that
+    materializes its cache; edges = 2 × pairs).
 
-    - ``"auto"`` (default): count the directed pair set once (the same
-      action that materializes its cache; edges = 2 × pairs) and pick: at
-      most ``small_graph_edges`` edges → ``"driver"``, else ``"label"``. The
-      broadcast-join move applied to connected components — the dup GRAPH
-      is orders of magnitude smaller than the corpus (only documents with
-      a near-duplicate appear), so even a 100 TB corpus usually yields a
-      driver-sized graph; the distributed loop is the safety net, not the
-      common case.
-    - ``"driver"``: collect the edge set and run union-find on the driver
-      (exact, deterministic, microseconds for the graphs the threshold
-      admits — 500k edge rows ≈ 12 MB of longs); every per-round shuffle
-      and blocking action disappears.
-    - ``"label"``: min-label propagation — each round every node takes
-      the min of its own and its neighbors' labels; O(component diameter)
-      hops, TWO hops fused per round (r13: each round's single action —
-      a full job launch plus a blocking driver round-trip at scale — now
-      advances the frontier twice; labels are monotone non-increasing,
-      so 2N fused hops ≡ 2N synchronous rounds and the fixpoint test is
-      unchanged). Near-dup components are shallow (duplicates of a
-      common original), so this is 1-2 actions in practice. Raises
-      :class:`ComponentsNotConverged` if labels are still moving after
+    - At most ``small_graph_edges`` edges: collect the edge set and run
+      union-find on the driver (exact, deterministic, microseconds for
+      the graphs the bound admits — 500k edge rows ≈ 12 MB of longs). The
+      dup GRAPH is orders of magnitude smaller than the corpus (only
+      documents with a near-duplicate appear), so even a 100 TB corpus
+      usually takes this route.
+    - Larger graphs: alternating large-star/small-star contraction
+      (Kiveris et al., "Connected Components in MapReduce and Beyond",
+      SoCC'14) — O(log n) contractions regardless of component diameter,
+      two fused per round (one Spark action per round). Raises
+      :class:`ComponentsNotConverged` if not at its fixed point after
       ``max_iters`` rounds — never returns partial (wrong) clusters.
-    - ``"star"``: alternating large-star/small-star contraction (Kiveris
-      et al., "Connected Components in MapReduce and Beyond", SoCC'14) —
-      O(log n) contractions regardless of diameter, two fused per
-      round/action (r13, same barrier-halving move); the fallback for
-      adversarially deep graphs (chained near-dups).
+      ``small_graph_edges=0`` sends every non-empty graph here.
 
-    All backends converge to the identical fixpoint (min reachable id per
+    Both routes reach the identical fixpoint (min reachable id per
     component). Returns (id_col, cluster_id) — deterministic on any
     layout.
     """
     ia, ib = pair_cols
     # Persist the DIRECTED pair set — `pairs` is usually an expensive lazy
-    # plan (the whole LSH pipeline), and every backend re-reads the edges.
-    # Persisting pairs (not the symmetrized set) means the auto-route
-    # count, the driver collect, and a same-session sibling call (e.g.
-    # `dedup_cluster_survivors` right after `dedup_clusters` — Spark's
-    # CacheManager matches the canonicalized plan) all traverse the LSH
-    # pipeline ONCE and touch half the rows the old explode-first layout
-    # materialized.
+    # plan (the whole LSH pipeline), and both routes re-read the edges.
+    # The route count, the driver collect, and a same-session sibling call
+    # (e.g. `dedup_cluster_survivors` right after `dedup_clusters` —
+    # Spark's CacheManager matches the canonicalized plan) all traverse
+    # the LSH pipeline ONCE.
     directed = _persist_tracked(
         pairs.select(F.col(ia).alias("src"), F.col(ib).alias("dst"))
     )
-
-    if backend == "auto":
-        # union-find is direction-blind, so the driver bound counts
-        # directed pairs (edges = 2 × pairs).
-        backend = "driver" if 2 * directed.count() <= small_graph_edges else "label"
-    if backend == "driver":
+    # union-find is direction-blind and star contraction symmetrizes its
+    # own input, so both routes take the directed pairs as they are.
+    if 2 * directed.count() <= small_graph_edges:
         linked = _components_driver_union_find(directed)
     else:
-        # The distributed iterations need both edge directions; explode
-        # emits them in one pass over the (now cached) pair set.
-        sym = _persist_tracked(
-            directed.select(
-                F.explode(
-                    F.array(
-                        F.struct(F.col("src"), F.col("dst")),
-                        F.struct(
-                            F.col("dst").alias("src"), F.col("src").alias("dst")
-                        ),
-                    )
-                ).alias("e")
-            ).select("e.src", "e.dst")
-        )
-        if backend == "label":
-            linked = _components_label_propagation(sym, max_iters)
-        elif backend == "star":
-            linked = _components_star_contraction(sym, max_iters)
-        else:  # pragma: no cover - caller bug
-            raise ValueError(f"unknown components backend: {backend!r}")
+        linked = _components_star_contraction(directed, max_iters)
 
     # Singletons (no edges) keep themselves as cluster id; one anti-join,
     # outside the loop. ``assume_unique_ids=True`` (an id column that is
@@ -1085,10 +1002,9 @@ def dedup_components(
 
 def _components_driver_union_find(edges: DataFrame) -> DataFrame:
     """Exact union-find over a driver-collected edge set — the small-graph
-    fast path ('auto' guarantees the collect is bounded). union(a,b) is
-    direction-blind, so the DIRECTED pair set suffices (half the rows of
-    the symmetrized set). Returns (node, label) for every node with at
-    least one edge."""
+    fast path (the ``small_graph_edges`` route bounds the collect).
+    union(a,b) is direction-blind, so the DIRECTED pair set suffices.
+    Returns (node, label) for every node with at least one edge."""
     parent: dict = {}
 
     def find(x):
@@ -1117,82 +1033,10 @@ def _components_driver_union_find(edges: DataFrame) -> DataFrame:
     return spark.createDataFrame(labels, schema)
 
 
-def _components_label_propagation(sym: DataFrame, max_iters: int) -> DataFrame:
-    """Min-label propagation over the (persisted, symmetric) edge set.
-    Returns (node, label) for every node with at least one edge."""
-    labels = sym.select(F.col("src").alias("node")).distinct().withColumn(
-        "label", F.col("node")
-    ).persist()
-    round_cache = labels  # the persisted plan backing the current labels
-    converged = False
-    rounds = 0
-    for _ in range(max_iters):
-        rounds += 1
-        # TWO propagation hops fused into this round's single action
-        # (r13): at scale each round costs a job launch + a blocking
-        # driver round-trip for the convergence count, so advancing the
-        # frontier twice per barrier halves both. Hop 2 consumes hop 1's
-        # labels INSIDE the same plan — labels are monotone
-        # non-increasing under min, so 2 fused hops ≡ 2 synchronous
-        # rounds, and changed==0 still holds iff the fixpoint is
-        # reached (a min-update can never revert).
-        proposed = labels.select("node", "label", F.col("label").alias("new_label"))
-        for _hop in range(2):
-            nbr_min = (
-                sym.join(
-                    proposed.select(
-                        F.col("node").alias("dst"),
-                        F.col("new_label").alias("dst_label"),
-                    ),
-                    "dst",
-                )
-                .groupBy("src")
-                .agg(F.min("dst_label").alias("nbr_label"))
-            )
-            proposed = (
-                proposed.join(nbr_min, proposed["node"] == nbr_min["src"], "left")
-                .select(
-                    "node",
-                    "label",
-                    F.least(
-                        F.col("new_label"),
-                        F.coalesce(F.col("nbr_label"), F.col("new_label")),
-                    ).alias("new_label"),
-                )
-            )
-        # Lazy localCheckpoint on `proposed`: the convergence count below
-        # materializes it (ONE action per round — the checkpoint caches
-        # the round AND truncates lineage). Without truncation each
-        # round's logical plan embeds the previous round's whole tree ~2×,
-        # so analysis cost grows 2^rounds — persist() alone does NOT
-        # truncate lineage, it only caches execution. On a real cluster
-        # swap for `checkpoint()` with a reliable dir (localCheckpoint
-        # does not survive executor loss).
-        proposed = proposed.localCheckpoint(eager=False)
-        changed = proposed.filter(F.col("new_label") != F.col("label")).count()
-        round_cache.unpersist()
-        round_cache = proposed
-        labels = proposed.select("node", F.col("new_label").alias("label"))
-        if changed == 0:
-            converged = True
-            break
-    # the returned plan reads the final persisted round (tracked so
-    # release_shingle_caches() frees it in long-lived sessions)
-    _SHINGLE_CACHES.append(round_cache)
-    LAST_COMPONENTS_INFO.update(backend="label", rounds=rounds)
-    if not converged:
-        raise ComponentsNotConverged(
-            f"label propagation still moving after {max_iters} rounds "
-            "(2 hops each) — component diameter exceeds 2·max_iters; raise "
-            "max_iters or use "
-            'backend="star" (O(log n) rounds)'
-        )
-    return labels
-
-
-def _components_star_contraction(sym: DataFrame, max_iters: int) -> DataFrame:
+def _components_star_contraction(pairs: DataFrame, max_iters: int) -> DataFrame:
     """Alternating large-star/small-star contraction (Kiveris et al.,
-    SoCC'14). Each iteration rewires every node's larger/smaller neighbors
+    SoCC'14) over (src, dst) edges in either orientation — large-star
+    symmetrizes its input. Each iteration rewires every node's larger/smaller neighbors
     to its neighborhood minimum; the edge set converges in O(log n)
     iterations to a forest of stars rooted at each component's minimum.
 
@@ -1246,15 +1090,13 @@ def _components_star_contraction(sym: DataFrame, max_iters: int) -> DataFrame:
     # the bottleneck (persist() caches execution but keeps full lineage).
     # The signature action materializes the checkpoint — still one job per
     # iteration. On a real cluster use `checkpoint()` + a reliable dir.
-    edges = sym.filter(F.col("src") != F.col("dst"))
-    cur = edges.localCheckpoint(eager=False)
+    cur = pairs.filter(F.col("src") != F.col("dst")).localCheckpoint(eager=False)
     prev_sig = None
     converged = False
     rounds = 0
     for _ in range(max_iters):
         rounds += 1
-        # Two large+small contractions fused per action (r13 — the same
-        # barrier-halving move as the label backend): a fixpoint is
+        # Two large+small contractions fused per action: a fixpoint is
         # preserved by re-application, so signature equality between
         # consecutive ACTIONS still detects it exactly.
         nxt = small_star(large_star(small_star(large_star(cur)))).localCheckpoint(

@@ -25,6 +25,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from manifold_spark.operators.dedup import (
+    _bucket_candidate_pairs,
+    _persist_tracked,
+    _streaming_cap_candidates,
+)
 from manifold_spark.operators.linalg import (
     cosine_expr,
     dot_expr,
@@ -757,57 +762,16 @@ def rp_lsh_near_dup(
     candidates only. The fingerprint costs num_bits·dim multiply-adds
     per vector ONCE and is the thing you'd persist next to the corpus.
 
-    ``diagnostics``: when a dict is passed, cap telemetry is computed
-    with extra Spark actions and two intermediates (bucket sizes,
-    candidate pairs) are persisted through the SHARED operator-cache
-    registry — the caller must call `dedup.release_shingle_caches()`
-    afterwards to free executor memory (the bench tiers and tests do;
-    a long-lived session that skips it leaks the two cached frames).
-    Leave as None (the default) for production runs: no extra actions,
-    nothing persisted.
+    ``diagnostics``: when a dict is passed, the bucket-cap telemetry of
+    `dedup._bucket_candidate_pairs` is computed with extra Spark actions
+    and the candidate pairs are persisted through the SHARED
+    operator-cache registry — the caller must call
+    `dedup.release_shingle_caches()` afterwards to free executor memory
+    (the bench tiers and tests do). Leave as None (the default) for
+    production runs: no extra actions, nothing persisted.
     """
     bands = _rp_band_entries(corpus, dim, num_bits, band_bits, id_col, vec_col)
-    if diagnostics is not None:
-        # Same cap telemetry contract as dedup.minhash_lsh_pairs — extra
-        # Spark actions, bench/ops tooling only (the production path
-        # never aggregates standalone bucket sizes; the cap gate lives
-        # inside `_bucket_candidate_pairs`, r14).
-        from manifold_spark.operators.dedup import _persist_tracked
-
-        sizes = _persist_tracked(
-            bands.groupBy("band", "key").agg(F.count(F.lit(1)).alias("n"))
-        )
-        stats = sizes.agg(
-            F.count(F.lit(1)).alias("n_buckets"),
-            F.sum("n").alias("n_band_entries"),
-            F.max("n").alias("max_bucket_size"),
-            F.count(F.when(F.col("n") > max_bucket, F.lit(1))).alias(
-                "buckets_over_cap"
-            ),
-            F.coalesce(
-                F.sum(F.when(F.col("n") > max_bucket, F.col("n"))), F.lit(0)
-            ).alias("entries_dropped_by_cap"),
-            F.coalesce(
-                F.sum(
-                    F.when(
-                        F.col("n") <= max_bucket,
-                        (F.col("n") * (F.col("n") - 1)) / 2,
-                    )
-                ),
-                F.lit(0),
-            ).cast("long").alias("pair_formation_bound"),
-        ).collect()[0]
-        diagnostics.update(
-            {k: stats[k] for k in stats.asDict()}, max_bucket_cap=max_bucket
-        )
-    from manifold_spark.operators.dedup import _bucket_candidate_pairs
-
-    candidates = _bucket_candidate_pairs(bands, ["band", "key"], "vid", max_bucket)
-    if diagnostics is not None:
-        from manifold_spark.operators.dedup import _persist_tracked
-
-        candidates = _persist_tracked(candidates)
-        diagnostics["candidate_pairs"] = candidates.count()
+    candidates = _bucket_candidate_pairs(bands, "vid", max_bucket, diagnostics)
 
     va = corpus.select(
         F.col(id_col).alias("id_a"), F.col(vec_col).alias("vec_a"),
@@ -885,35 +849,9 @@ def rp_lsh_index_upsert(
         all_entries = old_entries.unionByName(b_index["entries"])
         all_vecs = index["vectors"].unionByName(b_index["vectors"])
 
-    ok_buckets = (
-        all_entries.groupBy("band", "key")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") <= max_bucket)
-        .select("band", "key")
+    candidates = _streaming_cap_candidates(
+        b_index["entries"], old_entries, "vid", max_bucket
     )
-    new_b = b_index["entries"].join(ok_buckets, ["band", "key"])
-
-    nb_a, nb_b = new_b.alias("a"), new_b.alias("b")
-    cand = nb_a.join(
-        nb_b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.key") == F.col("b.key"))
-        & (F.col("a.vid") < F.col("b.vid")),
-    ).select(F.col("a.vid").alias("id_a"), F.col("b.vid").alias("id_b"))
-    if old_entries is not None:
-        old_b = old_entries.join(ok_buckets, ["band", "key"])
-        o, n = old_b.alias("o"), new_b.alias("n")
-        cross = o.join(
-            n,
-            (F.col("o.band") == F.col("n.band"))
-            & (F.col("o.key") == F.col("n.key"))
-            & (F.col("o.vid") != F.col("n.vid")),
-        ).select(
-            F.least(F.col("o.vid"), F.col("n.vid")).alias("id_a"),
-            F.greatest(F.col("o.vid"), F.col("n.vid")).alias("id_b"),
-        )
-        cand = cand.unionByName(cross)
-    candidates = cand.distinct()
 
     va = all_vecs.select(
         F.col("vid").alias("id_a"), F.col("vec").alias("vec_a"),
@@ -1030,8 +968,6 @@ def semdedup(
     # persist precedent; released by `operator_cache_scope`/
     # `release_shingle_caches`). At production scale this is the
     # "persist the assignment layout once" shape SCALING.md documents.
-    from manifold_spark.operators.dedup import _persist_tracked
-
     with_sim = _persist_tracked(
         assigned.join(broadcast(cents), "centroid_id")
         .withColumn("cent_sim", cosine_expr(vec_col, "cent_vec", dim))

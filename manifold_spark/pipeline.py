@@ -35,7 +35,6 @@ def run_week(
     raw_root: str,
     execution_date: str | dt.date,
     infer_schema: bool = False,
-    idempotent_fact: bool = True,
     bucketed_dims: int | None = None,
     stage_timings: dict | None = None,
 ) -> dict[str, int]:
@@ -166,9 +165,9 @@ def run_week(
     def _fact_prep() -> tuple[int, int]:
         if not store.exists("presentation", "fact_stock"):
             return 0, 0
-        existing = store.read(spark, "presentation", "fact_stock")
-        if idempotent_fact:
-            existing = existing.filter(F.col("date_id") != week_date_id)
+        existing = store.read(spark, "presentation", "fact_stock").filter(
+            F.col("date_id") != week_date_id
+        )
         row = existing.agg(
             F.max("id").alias("mx"), F.count(F.lit(1)).alias("n")
         ).collect()[0]
@@ -183,8 +182,8 @@ def run_week(
     _mark("scd2_dims")
 
     # Stage 6 — fact load: write ONLY the week's date_id partition.
-    # Idempotent mode (default) uses dynamic partition overwrite, so a
-    # re-run replaces the week in place; the id offset comes from the OTHER
+    # Dynamic partition overwrite makes the load idempotent: a re-run
+    # replaces the week in place; the id offset comes from the OTHER
     # partitions' max (a driver-side scalar resolved before the write job
     # starts, so there is no read-while-write hazard). Cost per week is
     # O(week), never O(table history); all other partitions' files are
@@ -209,10 +208,7 @@ def run_week(
     )
     obs = Observation("fact_load_rows")
     fact_new = fact_new.observe(obs, F.count(F.lit(1)).alias("n"))
-    if idempotent_fact:
-        store.overwrite_partitions(fact_new, "presentation", "fact_stock", partition_by=["date_id"])
-    else:
-        store.append(fact_new, "presentation", "fact_stock", partition_by=["date_id"])
+    store.overwrite_partitions(fact_new, "presentation", "fact_stock", partition_by=["date_id"])
     total_fact = n_retained + int(obs.get["n"])
     if total_fact == 0:
         raise quality.QualityError("table 'fact_stock' is empty")

@@ -178,6 +178,41 @@ def test_dedup_components_transitive_chain(spark):
     assert out == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 6}
 
 
+@pytest.mark.parametrize("id_col", ["doc_id", "vid"])
+def test_streaming_cap_candidates_rule(spark, id_col):
+    """The streaming-cap candidate step shared by the incremental indexes
+    (minhash upsert/probe, RP-LSH upsert), against hand-made entries with
+    max_bucket=3. Old ids are < 10 or ≥ 40, batch ids 10-14."""
+    schema = f"{id_col} long, band int, key string"
+    old = spark.createDataFrame(
+        [
+            (1, 0, "a"), (2, 0, "a"),  # 2 old + 2 new = 4 > cap: only now over
+            (3, 0, "b"), (40, 0, "b"),  # in cap with 12: old on both sides
+            (5, 1, "d"), (6, 1, "d"),  # old-only bucket: never pairs
+        ],
+        schema,
+    )
+    new = spark.createDataFrame(
+        [
+            (10, 0, "a"), (11, 0, "a"),
+            (12, 0, "b"),
+            (13, 1, "c"), (14, 1, "c"),  # new-only bucket
+            (13, 2, "c"), (14, 2, "c"),  # same pair in a second band
+        ],
+        schema,
+    )
+
+    def pairs(old_entries):
+        got = dedup._streaming_cap_candidates(new, old_entries, id_col, max_bucket=3)
+        rows = [(r["id_a"], r["id_b"]) for r in got.collect()]
+        assert len(rows) == len(set(rows))  # distinct
+        return set(rows)
+
+    assert pairs(old) == {(3, 12), (12, 40), (13, 14)}
+    # empty index: the batch pairs with itself only, bucket "a" in cap
+    assert pairs(None) == {(10, 11), (13, 14)}
+
+
 def test_topk_bruteforce_self_similarity(spark):
     import math
 

@@ -214,7 +214,7 @@ def test_scan_prunes_columns_for_projection(spark, sf_dir):
 def test_ngram_df_cap_is_broadcast_stoplist(spark, sf_dir):
     """The df cap must apply as a broadcast anti-join against the tiny
     over-cap stop-list (r6), NOT a count window that sorts every exploded
-    shingle row — and the window fallback must stay selectable."""
+    shingle row."""
     from manifold_spark.operators.dedup import ngram_jaccard_pairs, release_shingle_caches
     from manifold_spark.queries import _t
 
@@ -225,11 +225,6 @@ def test_ngram_df_cap_is_broadcast_stoplist(spark, sf_dir):
     plan = _plan(capped)
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
     assert "Window" not in plan
-    window = ngram_jaccard_pairs(
-        docs, "text", "doc_id", ["lang", "source"], threshold=0.1, max_df=50,
-        df_cap_strategy="window",
-    )
-    assert "Window" in _plan(window)
     release_shingle_caches()
 
 

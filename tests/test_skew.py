@@ -1,7 +1,7 @@
 """Adversarial-skew gates (VERDICT r5 ask #1): prove the skew defenses
 actually ENGAGE — every prior round's bench diagnostics showed the
 minhash `max_bucket` / ngram `max_df` caps non-binding (max bucket 4,
-0 dropped) and components never needed the star backend. The skewed /
+0 dropped) and components never needed star contraction. The skewed /
 deep-chain corpora here are the same deterministic constructions the
 driver gates `dedup_skew_guard` / `dedup_clusters_deep` run, so cap
 engagement is verified on exactly the corpus whose capped RESULT is
@@ -103,14 +103,14 @@ def test_deep_chain_routes_to_star_and_converges(spark, sf_dir):
         ch.withColumn("blk", F.lit(1)), "text", "doc_id", ["blk"], threshold=0.3
     )
     comps = dedup.dedup_components(
-        ch.select("doc_id"), pairs, backend="star", assume_unique_ids=True
+        ch.select("doc_id"), pairs, small_graph_edges=0, assume_unique_ids=True
     )
     rows = comps.collect()
     dedup.release_shingle_caches()
     assert dedup.LAST_COMPONENTS_INFO["backend"] == "star"
     # 500 docs / 8 chains → diameter ~62; star needs ~log2(62) ≈ 6 rounds
     # (+1 fixpoint confirmation). Anything near O(diameter) means the
-    # contraction regressed to propagation.
+    # contraction regressed to one-hop propagation.
     assert dedup.LAST_COMPONENTS_INFO["rounds"] <= 12, dedup.LAST_COMPONENTS_INFO
     # Exactly CHAIN_N components, labeled by each chain's min id (= chain
     # index, since doc_id = pos·CHAIN_N + chain).
@@ -119,23 +119,6 @@ def test_deep_chain_routes_to_star_and_converges(spark, sf_dir):
     by_doc = {r["doc_id"]: r["cluster_id"] for r in rows}
     assert all(by_doc[d] == d % CHAIN_N for d in by_doc)
     ch.unpersist()
-
-
-def test_deep_chain_breaks_label_propagation(spark, sf_dir):
-    """Same graph under the O(diameter) backend with the default round
-    budget: must refuse to return partial labels."""
-    ch = chain_corpus(
-        _t(spark, sf_dir, "documents").select("doc_id").filter(F.col("doc_id") < 200)
-    )
-    pairs = dedup.ngram_jaccard_pairs(
-        ch.withColumn("blk", F.lit(1)), "text", "doc_id", ["blk"], threshold=0.3
-    )
-    with pytest.raises(dedup.ComponentsNotConverged):
-        dedup.dedup_components(
-            ch.select("doc_id"), pairs, backend="label", max_iters=5,
-            assume_unique_ids=True,
-        ).count()
-    dedup.release_shingle_caches()
 
 
 def test_minhash_cap_is_monotone_subset(spark, skewed):
